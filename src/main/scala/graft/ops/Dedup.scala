@@ -1,8 +1,11 @@
 package graft.ops
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.{CappedKeys, FirstMatchBandExpr, FirstUncappedMatchExpr}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -10,39 +13,114 @@ import org.apache.spark.sql.functions._
   *  - Exact dedup: one hash-shuffle on the 8-byte fingerprint — never on the
   *    full text. Keeper selection via min(doc_id) aggregation, not windows
   *    over raw text.
-  *  - MinHash-LSH: shingle -> K minhashes -> B bands; shuffle on (band,
-  *    band-hash) keys only; candidate pairs emerge from same-bucket
-  *    self-joins on the tiny bucket table; NO all-pairs crossJoin anywhere.
-  *    Bucket skew (boilerplate pages) is capped with a per-bucket limit.
-  *  - SimHash: 64-bit signature per doc; near-dup candidates via banded
-  *    16-bit chunks (Hamming-distance-friendly), same bucket-join shape.
+  *  - Near-duplicate dedup (MinHash, 16-bit and wide SimHash, embedding
+  *    hyperplanes) runs on ONE banded-LSH core, [[lshPairs]]. A family
+  *    supplies its banded frame, its first-match expression and its verify
+  *    step; shuffles are on (band, bucket) keys only, and candidate pairs
+  *    come from same-bucket self-joins — NO all-pairs crossJoin anywhere.
   *  - All signatures are computed with codegen'd SQL functions (xxhash64,
-  *    aggregate over shingle arrays) — no UDFs, no driver collect.
+  *    fused shingle / band expressions) — no UDFs.
+  *
+  * The core's contract, with the measured reasons for each step:
+  *  - Input: `(doc_id, band, bucket, payload…)`, one row per document and
+  *    band. A bucket holding more than `maxBucket` rows (a boilerplate
+  *    explosion; at scale one hot bucket emits O(n²) pairs) is dropped.
+  *  - Capped-key set: capped buckets are FEW BY CONSTRUCTION — each holds
+  *    more than maxBucket rows, so fewer than bandedRows/(maxBucket+1)
+  *    exist. They are collected once and broadcast as an exact sorted set
+  *    ([[graft.functions.CappedKeys]]), so the cap is a codegen filter, not
+  *    a corpus-order join, and first-match needs no per-doc kept-bucket
+  *    regroup (a groupBy + map + re-explode measured at 37 s of the 1000×
+  *    d_minhash wall). A corpus capping more than `graft.lsh.cappedMaxKeys`
+  *    buckets (default 4M) falls back to the joined + grouped formulation,
+  *    which is also the fence reference (PipelineGatesSuite, budget 0).
+  *  - First-match emission: a pair meeting in several bands is emitted only
+  *    at its first SURVIVING shared band, so pairs are unique by
+  *    construction. This replaced a dropDuplicates over every pair
+  *    instance, measured at 100× as the pipeline's biggest stage (176M
+  *    instances hashed down to 27M pairs, 14 s of a 26 s run). Embedding
+  *    needs none: each vector lands in exactly one bucket.
+  *  - Pinned exchanges: the self-join (and minhash's shingle attach) is a
+  *    user repartition at `spark.sql.shuffle.partitions`. Its payloads —
+  *    per-doc vectors repeated across band rows, id-only pair streams —
+  *    compress far below raw size, so AQE's compressed-size coalescing
+  *    packed tens of millions of raw rows into one reducer: at the 1000×
+  *    corpus the default plan died in its sort-merge sort at 16 GB heap,
+  *    while the pinned one ran 266 s against the grouped shape's 484 s. A
+  *    user repartition is never coalesced, and both self-join sides read
+  *    the one exchange (ReusedExchange).
+  *  - Cache lifetime: the core persists the banded frame (and a family's
+  *    shared upstream frame), materializes the verified pairs eagerly with
+  *    `localCheckpoint`, and releases every cache before it returns, on
+  *    success or failure.
   */
 object Dedup {
 
-  /** LSH exchange pin width (r14 session 2): the banded self-join and the
-    * candidate-attach exchanges carry payloads whose compressed size is far
-    * below raw (per-doc vectors repeated across band rows; id-only pair
-    * streams), so AQE's compressed-size partition coalescing over-packs
-    * reducers at scale — measured at the 1000x corpus as sort-merge heap
-    * death / multi-minute spill under a 16 GB driver. These exchanges are
-    * therefore issued as user repartitions (never coalesced) at the
-    * session's shuffle width, which the bench / production session already
-    * scales with input size. `graft.lsh.pinnedWidth`: unset = pin to
-    * spark.sql.shuffle.partitions (the scale-safe default), 0 = do not pin
-    * (planner exchanges + AQE coalescing), N > 0 = pin to N.
+  /** `d` repartitioned on `cols` at the session shuffle width — an LSH
+    * exchange AQE may not coalesce (see the object doc).
     */
-  private def lshPinWidth(df: DataFrame): Option[Int] =
-    df.sparkSession.conf.getOption("graft.lsh.pinnedWidth").map(_.toInt) match {
-      case Some(0) => None
-      case Some(n) if n > 0 => Some(n)
-      case _ => Some(df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
-    }
+  private def pinned(d: DataFrame, cols: Column*): DataFrame =
+    d.repartition(d.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, cols: _*)
 
-  private def pinned(d: DataFrame, w: Option[Int], cols: Column*): DataFrame =
-    w.map(n => d.repartition(n, cols: _*)).getOrElse(d)
-
+  /** The banded-LSH pipeline shared by the near-duplicate operators (the
+    * contract is in the object doc): bucket sizes, the capped-key set or
+    * the joined + grouped fallback, the pinned self-join, first-match,
+    * then `verify`, materialized before every cache is released.
+    *
+    * @param banded     `(doc_id, band: int, bucket: bigint, payload…)`
+    * @param bands      band count (the grouped fallback's kept-vector length)
+    * @param firstMatch the family's first uncapped shared band over the
+    *                   `<payload>_a` / `<payload>_b` columns; None when every
+    *                   doc lands in exactly one bucket
+    * @param shared     an upstream frame of `banded` that `verify` re-reads;
+    *                   persisted first, so banding reads its cache
+    * @param verify     candidate pairs `(doc_id_a, doc_id_b, <payload>_a…,
+    *                   <payload>_b…)`, each pair once, to verified pairs
+    */
+  private def lshPairs(banded: DataFrame, bands: Int, maxBucket: Int,
+                       firstMatch: Option[Broadcast[CappedKeys] => Column],
+                       shared: Option[DataFrame] = None)(
+                       verify: DataFrame => DataFrame): DataFrame = {
+    val cached = (shared.toSeq :+ banded).map(_.persist())
+    try {
+      val sizes = banded.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
+      val cappedMax = banded.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
+        .map(_.toLong).getOrElse(4000000L)
+      val cappedRows = sizes.filter(col("__bsz") > maxBucket).select("band", "bucket")
+        .limit(math.min(cappedMax, Int.MaxValue - 2L).toInt + 1).collect()
+      val (sides, firstBand) =
+        if (cappedMax >= 0 && cappedRows.length <= cappedMax) {
+          val capped = banded.sparkSession.sparkContext.broadcast(
+            CappedKeys.fromRows(cappedRows, bands))
+          (banded.filter(!FirstUncappedMatchExpr.cappedContains(col("band"), col("bucket"), capped)),
+            firstMatch.map(_(capped)))
+        } else {
+          val kept = banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
+            Seq("band", "bucket")).drop("__bsz")
+          if (firstMatch.isEmpty) (kept, None)
+          else {
+            // per-doc kept-bucket vectors: slot j = the band-j bucket, NULL
+            // when capped away (try_element_at: ANSI-safe on a missing key)
+            val payload = banded.columns.toSeq.filterNot(Set("doc_id", "band", "bucket"))
+            val regrouped = kept.groupBy("doc_id")
+              .agg(map_from_entries(collect_list(struct(col("band"), col("bucket")))).as("__m"),
+                payload.map(p => first(p).as(p)): _*)
+              .select((col("doc_id") +: payload.map(col)) :+ transform(sequence(lit(0), lit(bands - 1)),
+                j => try_element_at(col("__m"), j)).as("__kept"): _*)
+            (regrouped.select(col("*"), posexplode(col("__kept")).as(Seq("band", "bucket")))
+              .filter(col("bucket").isNotNull),
+              Some(FirstMatchBandExpr.firstMatchBand(col("__kept_a"), col("__kept_b"))))
+          }
+        }
+      val both = pinned(sides, col("band"), col("bucket"))
+      val carried = both.columns.toSeq.filterNot(Set("band", "bucket"))
+      def side(s: String) =
+        both.select(col("band") +: col("bucket") +: carried.map(c => col(c).as(s"${c}_$s")): _*)
+      val pairs = side("a").join(side("b"), Seq("band", "bucket"))
+        .filter(col("doc_id_a") < col("doc_id_b"))
+      verify(firstBand.fold(pairs)(m => pairs.filter(col("band") === m))).localCheckpoint(eager = true)
+    } finally cached.foreach(_.unpersist())
+  }
 
   // ---------------------------------------------------------------- exact
 
@@ -122,33 +200,6 @@ object Dedup {
         i => concat_ws(" ", slice(words, i + 1, lit(w)))))
     }
 
-  /** K minhash values over the shingle set. Each hash h_k(s) =
-    * xxhash64(shingle, seed=k); minhash_k = MIN over shingles.
-    *
-    * Computed as ONE aggregate pass over the shingle array with an
-    * elementwise-min accumulator — K separate array_min(transform(...))
-    * columns would duplicate the whole shingle expression K times (Spark
-    * collapses projections, so a named column does not protect you) and
-    * showed up as a 40x slowdown in the bench.
-    */
-  def minhashSignature(shingleCol: Column, k: Int = 32): Column = {
-    val init = array_repeat(lit(Long.MaxValue), k)
-    aggregate(shingleCol, init, (acc, s) => {
-      val hashes = array((0 until k).map(seed => xxhash64(s, lit(seed))): _*)
-      zip_with(acc, hashes, (a, b) => least(a, b))
-    })
-  }
-
-  /** Banded LSH bucket keys: B bands of R rows each (K = B*R). Bucket key =
-    * hash of the band's minhash slice. Two docs sharing any band bucket are
-    * candidates.
-    */
-  def lshBandKeys(signature: Column, bands: Int, rows: Int): Column =
-    array((0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64(concat_ws(",", slice(signature, b * rows + 1, rows))).as("bucket"))
-    }: _*)
-
   /** Near-duplicate candidate pairs via MinHash-LSH with exact Jaccard
     * verification on shingle sets.
     *
@@ -162,7 +213,6 @@ object Dedup {
   def minhashNearDuplicates(df: DataFrame, textCol: String = "text", idCol: String = "doc_id",
                             threshold: Double = 0.7, bands: Int = 8, rows: Int = 4,
                             maxBucket: Int = 1000): DataFrame = {
-    val k = bands * rows
     // shingle sets are carried as 64-bit fingerprints, not strings: the
     // pair-verification stage intersects these arrays once per candidate
     // pair, and long compares are ~10x cheaper than string compares
@@ -178,141 +228,42 @@ object Dedup {
       .withColumn("__sh", graft.functions.ShingleFpExpr.shingleFp(col("__text"), 3))
       .filter(size(col("__sh")) > 0)
       .select(col("doc_id"), col("__sh"))
-      .persist()
 
     // Signature + band buckets fused per row (functions.MinHashBandsExpr,
     // byte-identical hash chain to the explode + per-seed MIN + concat_ws
     // formulation it replaces — fenced in PipelineGatesSuite): the
     // signature never leaves its row, so the 100M-row explode and the
     // k-column groupBy-min disappear. Each exploded row CARRIES its full
-    // 8-slot band-key vector (r14 session 2) — the posexplode's Generate
-    // boundary pins minhashBands to one evaluation per doc, and the
-    // self-join sides below need no per-doc kept-vector regroup.
-    // persisted: slim feeds the bucket-size aggregate AND both self-join
-    // sides — without the cache the k-hash signature pass would run per
-    // consumer.
-    val slim = shingled
+    // band-key vector — the posexplode's Generate boundary pins
+    // minhashBands to one evaluation per doc, and the first-match below
+    // compares the two sides' vectors.
+    val banded = shingled
       .select(col("doc_id"),
         graft.functions.MinHashBandsExpr.minhashBands(col("__sh"), bands, rows).as("__kb"))
-      .select(col("doc_id"), col("__kb"),
-        posexplode(col("__kb")).as(Seq("band", "bucket")))
-      .persist()
-    val bucketSizes = slim.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
+      .select(col("doc_id"), col("__kb"), posexplode(col("__kb")).as(Seq("band", "bucket")))
 
-    // First-match candidate emission (r14): a pair meeting in several
-    // bands used to be deduplicated with dropDuplicates over every pair
-    // INSTANCE — measured at 100× as the pipeline's single biggest stage
-    // (176M instances hashed down to 27M pairs, 14 s of a 26 s run). Only
-    // the instance whose band equals the pair's first SURVIVING shared
-    // band is emitted — pairs are unique by construction, no dedup
-    // exchange. Cap-awareness (r14 session 2): buckets over the cap are
-    // FEW BY CONSTRUCTION (each holds > maxBucket rows, so their count is
-    // < bandedRows/(maxBucket+1) — boilerplate explosions, not the
-    // corpus), so "is (band, bucket) capped" is broadcastable knowledge:
-    // the capped keys are collected once and shipped as an exact sorted
-    // set ([[graft.functions.CappedKeys]]), the cap JOIN becomes a codegen
-    // filter, and the kept-vector regroup (a corpus-wide groupBy + map +
-    // re-explode, 37 s of the 1000× wall) disappears. An adversarial
-    // corpus capping more than `graft.lsh.cappedMaxKeys` buckets falls
-    // back to the joined+grouped formulation (kept below as the fence
-    // reference). Fenced set-identical in PipelineGatesSuite (incl. a
-    // capped earliest-shared-band case and a budget-0 forced fallback).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = bucketSizes.filter(col("__bsz") > maxBucket)
-      .select(col("band"), col("bucket")).limit(collectLimit).collect()
-    val candidates =
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        minhashCandidatesGrouped(slim, bucketSizes, bands, maxBucket)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, bands))
-        // Explicit session-width repartition: the carried __kb vector
-        // repeats across a doc's 8 band rows, so this exchange compresses
-        // ~8x better than its raw size — AQE's compressed-size coalescing
-        // then packs tens of millions of raw rows into one reducer, whose
-        // sort-merge sort OOMs (measured at the 1000x corpus: default AQE
-        // dies at 16 GB heap; pinned width runs in 266 s vs the grouped
-        // shape's 484 s). A user-specified repartition is never coalesced;
-        // the width tracks spark.sql.shuffle.partitions, which the bench /
-        // production session already scales with input size. Both join
-        // sides read the ONE exchange (ReusedExchange).
-        val sides = pinned(slim.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("band"), col("bucket"), capped)),
-          lshPinWidth(df), col("band"), col("bucket"))
-        val a = sides.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_id_a"), col("__kb").as("__kb_a"))
-        val b = sides.select(col("band"), col("bucket"),
-          col("doc_id").as("doc_id_b"), col("__kb").as("__kb_b"))
-        a.join(b, Seq("band", "bucket"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("band") === graft.functions.FirstUncappedMatchExpr
-            .firstUncappedMatch(col("__kb_a"), col("__kb_b"), capped))
-          .select("doc_id_a", "doc_id_b")
-      }
-
-    // attach the shingle sets to the (already deduplicated) candidate pairs.
-    // The shingle side is corpus-sized by definition — force a shuffle join
-    // so the optimizer can never elect to broadcast it (measured: a 20 MB
-    // broadcast threshold flips this join and costs ~1 s at sf0.1; at real
-    // scale broadcasting the corpus is fatal). Both attach exchanges are
-    // pinned to the session width (r14 session 2): the candidate-id side
-    // compresses far below its raw size, so AQE's compressed-size
-    // coalescing over-packs reducers whose shuffled-hash builds then hold
-    // hundreds of MB of shingle arrays per task (measured at the 1000×
-    // corpus as heap-death / multi-minute spill; pinned width + pinned
-    // self-join = 1.8× the grouped shape end to end).
-    val pw = lshPinWidth(df)
-    val pairs = pinned(candidates, pw, col("doc_id_a"))
-      .join(pinned(shingled.select(col("doc_id").as("doc_id_a"), col("__sh").as("__sh_a")),
-        pw, col("doc_id_a")).hint("shuffle_hash"), "doc_id_a")
-    val pairsB = pinned(pairs, pw, col("doc_id_b"))
-      .join(pinned(shingled.select(col("doc_id").as("doc_id_b"), col("__sh").as("__sh_b")),
-        pw, col("doc_id_b")).hint("shuffle_hash"), "doc_id_b")
-
-    // sorted-merge jaccard: same value as size(intersect)/size(union) on
-    // the sorted-distinct fingerprint arrays, with no per-pair hash set
-    pairsB.withColumn("jaccard",
-        round(graft.functions.SortedJaccardExpr.sortedJaccard(col("__sh_a"), col("__sh_b")), 6))
-      .filter(col("jaccard") >= threshold)
-      .select("doc_id_a", "doc_id_b", "jaccard")
-  }
-
-  /** The kept-vector (joined + grouped) candidate formulation — the
-    * over-budget fallback of [[minhashNearDuplicates]] (an adversarial
-    * corpus capping more buckets than `graft.lsh.cappedMaxKeys` can ship
-    * as a broadcast set) and the equivalence-fence reference
-    * (PipelineGatesSuite): cap via join against the size-filtered bucket
-    * table, per-doc kept-bucket vectors via groupBy + map (NULL slot =
-    * capped away), first-match over the NULL-able vectors.
-    */
-  private[graft] def minhashCandidatesGrouped(slim: DataFrame, bucketSizes: DataFrame,
-                                              bands: Int, maxBucket: Int): DataFrame = {
-    val keptRows = slim.select("doc_id", "band", "bucket")
-      .join(bucketSizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-        Seq("band", "bucket"))
-    val docKept = keptRows.groupBy("doc_id")
-      .agg(map_from_entries(collect_list(struct(col("band"), col("bucket")))).as("__m"))
-      .select(col("doc_id"),
-        // try_element_at: NULL for a band whose bucket was capped away
-        // (ANSI-safe; plain element_at errors on a missing map key)
-        transform(sequence(lit(0), lit(bands - 1)),
-          j => try_element_at(col("__m"), j)).as("__kb"))
-    val sides = docKept
-      .select(col("doc_id"), col("__kb"),
-        posexplode(col("__kb")).as(Seq("band", "bucket")))
-      .filter(col("bucket").isNotNull)
-      .persist()
-    val a = sides.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_id_a"), col("__kb").as("__kb_a"))
-    val b = sides.select(col("band"), col("bucket"),
-      col("doc_id").as("doc_id_b"), col("__kb").as("__kb_b"))
-    a.join(b, Seq("band", "bucket"))
-      .filter(col("doc_id_a") < col("doc_id_b"))
-      .filter(col("band") ===
-        graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kb_a"), col("__kb_b")))
-      .select("doc_id_a", "doc_id_b")
+    lshPairs(banded, bands, maxBucket,
+      Some(capped => FirstUncappedMatchExpr.firstUncappedMatch(col("__kb_a"), col("__kb_b"), capped)),
+      shared = Some(shingled)) { candidates =>
+      // attach the shingle sets to the (already unique) candidate pairs.
+      // The shingle side is corpus-sized by definition — force a shuffle
+      // join so the optimizer can never elect to broadcast it (measured: a
+      // 20 MB broadcast threshold flips this join and costs ~1 s at sf0.1;
+      // at real scale broadcasting the corpus is fatal). Both attach
+      // exchanges are pinned: the id-only candidate side compresses far
+      // below its raw size (see the object doc).
+      def attach(pairs: DataFrame, s: String): DataFrame =
+        pinned(pairs, col(s"doc_id_$s"))
+          .join(pinned(shingled.select(col("doc_id").as(s"doc_id_$s"), col("__sh").as(s"__sh_$s")),
+            col(s"doc_id_$s")).hint("shuffle_hash"), s"doc_id_$s")
+      // sorted-merge jaccard: same value as size(intersect)/size(union) on
+      // the sorted-distinct fingerprint arrays, with no per-pair hash set
+      attach(attach(candidates.select("doc_id_a", "doc_id_b"), "a"), "b")
+        .withColumn("jaccard",
+          round(graft.functions.SortedJaccardExpr.sortedJaccard(col("__sh_a"), col("__sh_b")), 6))
+        .filter(col("jaccard") >= threshold)
+        .select("doc_id_a", "doc_id_b", "jaccard")
+    }
   }
 
   /** EXACT n-gram Jaccard near-duplicates via an inverted shingle index:
@@ -379,13 +330,6 @@ object Dedup {
 
   // -------------------------------------------------------------- simhash
 
-  /** 63-bit SimHash over word shingles: per bit, sum +1/-1 of the shingle
-    * hash's bit value, take sign. One aggregate pass with a 63-counter
-    * accumulator (same projection-collapse trap as minhashSignature).
-    * Bit b is extracted arithmetically (halves + exact power-of-two
-    * division) because shiftright() only takes literal shift amounts;
-    * bit 63 is left clear so 2^b stays exactly representable and castable.
-    */
   /** Polynomial string hash replayable in any SQL engine: fold
     * (acc * 31 + codepoint) mod P over the characters, P a prime < 2^53 so
     * the fold never overflows BIGINT in engines that error on overflow.
@@ -404,6 +348,15 @@ object Dedup {
         i => ascii(s.substr(i, lit(1))).cast("long")),
       lit(0L), (a, c) => (a * mult + c) % lit(9007199254740881L))
 
+  /** 63-bit SimHash over word shingles: per bit, sum +1/-1 of the shingle
+    * hash's bit value, take sign. One aggregate pass with a 63-counter
+    * accumulator — K separate per-bit columns would duplicate the whole
+    * shingle expression K times (Spark collapses projections, so a named
+    * column does not protect you). Bit b is extracted arithmetically
+    * (halves + exact power-of-two division) because shiftright() only
+    * takes literal shift amounts; bit 63 is left clear so 2^b stays
+    * exactly representable and castable.
+    */
   def simhash(text: Column, w: Int = 2,
               hashFn: Column => Column = xxhash64(_)): Column = {
     val nBits = 63
@@ -495,102 +448,21 @@ object Dedup {
       case None     => graft.functions.SimHashExpr.simhash64(col("__text"), 2)
       case Some(fn) => simhash(col("__text"), hashFn = fn)
     }
-    val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+    val banded = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
       .withColumn("__sim", simCol)
-    val banded = docs.select(col("doc_id"), col("__sim"),
-      explode(array((0 until 4).map { c =>
-        struct(lit(c).as("chunk"),
-          shiftright(col("__sim"), c * 16).bitwiseAND(0xFFFFL).as("key"))
-      }: _*)).as("__ck"))
-      .select(col("doc_id"), col("__sim"), col("__ck.chunk"), col("__ck.key"))
-      // persisted: feeds the bucket-size aggregate AND the cap join — the
-      // upstream simhash computation must run once, not per branch
-      .persist()
-    // bucket stats are corpus-order in the worst case (one bucket per doc)
-    // — never let a size estimate flip this join to broadcast
-    val sizes = banded.groupBy("chunk", "key").agg(count(lit(1)).as("__bsz"))
-    // First-match candidate emission (r14): only the instance whose chunk
-    // equals the pair's first SURVIVING shared chunk is emitted — pairs
-    // unique by construction, no dropDuplicates exchange. Cap-awareness
-    // (r14 session 2, same shape as minhashNearDuplicates): capped chunks
-    // are ≤ 4 × 65,536 keys EVER (the whole 16-bit band key space), so the
-    // capped set always broadcasts — the cap JOIN becomes a codegen filter
-    // and the per-doc kept-vector regroup (groupBy + map + re-explode)
-    // disappears; the self-join sides carry only the 8-byte signature and
-    // the first-match recomputes chunk keys from it. The budget gate and
-    // grouped fallback are kept for config parity with minhash (a budget
-    // below 262,144 forces the joined formulation, which doubles as the
-    // fence reference — PipelineGatesSuite).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(col("chunk"), col("key")).limit(collectLimit).collect()
-    // materialize the (small, post-verify) pair set eagerly so the banded
-    // cache can be released before returning — without this every call
-    // leaked its cached band partitions for the session (r9 ADVICE);
-    // try/finally so a failed join/checkpoint cannot leak it either
-    try {
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        sim16PairsGrouped(banded, sizes, maxBucket, maxHamming)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition: see minhashNearDuplicates — the
-        // carried signature repeats across a doc's 4 chunk rows, so AQE's
-        // compressed-size coalescing over-packs reducers at scale
-        val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(df), col("chunk"), col("key"))
-        val a = kept.select(col("chunk"), col("key"),
-          col("doc_id").as("doc_id_a"), col("__sim").as("__sim_a"))
-        val b = kept.select(col("chunk"), col("key"),
-          col("doc_id").as("doc_id_b"), col("__sim").as("__sim_b"))
-        a.join(b, Seq("chunk", "key"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("chunk") === graft.functions.FirstUncappedSim16Expr
-            .firstUncappedSim16(col("__sim_a"), col("__sim_b"), capped))
-          .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
-          .filter(col("hamming") <= maxHamming)
-          .select("doc_id_a", "doc_id_b", "hamming")
-          .localCheckpoint(eager = true)
-      }
-    } finally banded.unpersist()
-  }
-
-  /** The kept-vector (joined + grouped) 16-bit simhash pair formulation —
-    * over-budget fallback and fence reference (see
-    * [[minhashCandidatesGrouped]]). Returns the eagerly-checkpointed pair
-    * set; its own sides cache is released before returning.
-    */
-  private[graft] def sim16PairsGrouped(banded: DataFrame, sizes: DataFrame,
-                                       maxBucket: Int, maxHamming: Int): DataFrame = {
-    val keptRows = banded.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-      Seq("chunk", "key"))
-    val sides = keptRows.groupBy("doc_id")
-      .agg(first("__sim").as("__sim"),
-        map_from_entries(collect_list(struct(col("chunk"), col("key")))).as("__m"))
       .select(col("doc_id"), col("__sim"),
-        transform(sequence(lit(0), lit(3)),
-          j => try_element_at(col("__m"), j)).as("__kc"))
-      .select(col("doc_id"), col("__sim"), col("__kc"),
-        posexplode(col("__kc")).as(Seq("chunk", "key")))
-      .filter(col("key").isNotNull)
-      .persist()
-    val a = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-      col("__sim").as("__sim_a"), col("__kc").as("__kc_a"))
-    val b = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-      col("__sim").as("__sim_b"), col("__kc").as("__kc_b"))
-    try {
-      a.join(b, Seq("chunk", "key"))
-        .filter(col("doc_id_a") < col("doc_id_b"))
-        .filter(col("chunk") ===
-          graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kc_a"), col("__kc_b")))
-        .withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
+        explode(array((0 until 4).map { c =>
+          struct(lit(c).as("band"), shiftright(col("__sim"), c * 16).bitwiseAND(0xFFFFL).as("bucket"))
+        }: _*)).as("__ck"))
+      .select(col("doc_id"), col("__sim"), col("__ck.band"), col("__ck.bucket"))
+    // the self-join sides carry only the 8-byte signature; the first-match
+    // recomputes the chunk keys from it
+    lshPairs(banded, 4, maxBucket, Some(capped => graft.functions.FirstUncappedSim16Expr
+      .firstUncappedSim16(col("__sim_a"), col("__sim_b"), capped))) {
+      _.withColumn("hamming", bit_count(col("__sim_a").bitwiseXOR(col("__sim_b"))))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
-        .localCheckpoint(eager = true)
-    } finally sides.unpersist()
+    }
   }
 
   /** Wide-band (126-bit) SimHash near-dups — the band-space scale path
@@ -628,111 +500,34 @@ object Dedup {
     // cost; a collapsed Project offers no evaluate-once protection), while
     // the Generate boundary pins the fused expression to exactly one
     // evaluation. Keys/signatures bit-identical (PipelineGatesSuite fence).
-    val banded = (hashFns match {
+    val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
+    val banded = hashFns match {
       case None =>
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-          .select(col("doc_id"),
-            explode(graft.functions.SimHashWideBandsExpr
-              .simhashWideBands(col("__text"), 2, salt)).as("__ck"))
-          .select(col("doc_id"), col("__ck.sa").as("__sa"),
-            col("__ck.sb").as("__sb"), col("__ck.chunk"), col("__ck.key"))
+        docs.select(col("doc_id"),
+            explode(graft.functions.SimHashWideBandsExpr.simhashWideBands(col("__text"), 2, salt)).as("__ck"))
+          .select(col("doc_id"), col("__ck.sa").as("__sa"), col("__ck.sb").as("__sb"),
+            col("__ck.chunk").as("band"), col("__ck.key").as("bucket"))
       case Some((fa, fb)) =>
-        df.select(col(idCol).as("doc_id"), col(textCol).as("__text"))
-          .withColumn("__sa", simhash(col("__text"), hashFn = fa))
+        docs.withColumn("__sa", simhash(col("__text"), hashFn = fa))
           .withColumn("__sb", simhash(col("__text"), hashFn = fb))
           .select(col("doc_id"), col("__sa"), col("__sb"),
             explode(array(
-              struct(lit(0).as("chunk"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("key")),
-              struct(lit(1).as("chunk"), shiftright(col("__sa"), 31).as("key")),
-              struct(lit(2).as("chunk"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("key")),
-              struct(lit(3).as("chunk"), shiftright(col("__sb"), 31).as("key")))).as("__ck"))
-          .select(col("doc_id"), col("__sa"), col("__sb"),
-            col("__ck.chunk"), col("__ck.key"))
-    }).persist()
-    val sizes = banded.groupBy("chunk", "key").agg(count(lit(1)).as("__bsz"))
-    // First-match candidate emission (r14) + capped-set cap (r14 session 2)
-    // — see simhashNearDuplicates: capped buckets are few by construction
-    // (< bandedRows/(maxBucket+1)), so the cap join becomes a broadcast-set
-    // codegen filter and the kept-vector regroup disappears; the self-join
-    // sides carry only the two 8-byte signatures and the first-match
-    // recomputes the 4 chunk keys from them. Over-budget corpora fall back
-    // to the joined+grouped formulation (the fence reference).
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(col("chunk"), col("key")).limit(collectLimit).collect()
-    // same cache discipline as the 16-bit path: eager-materialize the small
-    // verified pair set, then release the caches before returning —
-    // exception-safe so a failed join/checkpoint cannot leak them
-    try {
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        simWidePairsGrouped(banded, sizes, maxBucket, maxHamming)
-      else {
-        val capped = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 4))
-        // session-width user repartition: see minhashNearDuplicates — the
-        // carried signatures repeat across a doc's 4 chunk rows, so AQE's
-        // compressed-size coalescing over-packs reducers at scale
-        val kept = pinned(banded.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(col("chunk"), col("key"), capped)),
-          lshPinWidth(df), col("chunk"), col("key"))
-        val a = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-          col("__sa").as("__sa_a"), col("__sb").as("__sb_a"))
-        val b = kept.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-          col("__sa").as("__sa_b"), col("__sb").as("__sb_b"))
-        a.join(b, Seq("chunk", "key"))
-          .filter(col("doc_id_a") < col("doc_id_b"))
-          .filter(col("chunk") === graft.functions.FirstUncappedWideExpr
-            .firstUncappedWide(col("__sa_a"), col("__sb_a"),
-              col("__sa_b"), col("__sb_b"), capped))
-          .withColumn("hamming",
-            (bit_count(col("__sa_a").bitwiseXOR(col("__sa_b"))) +
-              bit_count(col("__sb_a").bitwiseXOR(col("__sb_b")))).cast("int"))
-          .filter(col("hamming") <= maxHamming)
-          .select("doc_id_a", "doc_id_b", "hamming")
-          .localCheckpoint(eager = true)
-      }
-    } finally banded.unpersist()
-  }
-
-  /** The kept-vector (joined + grouped) wide-band pair formulation —
-    * over-budget fallback and fence reference (see
-    * [[minhashCandidatesGrouped]]). Returns the eagerly-checkpointed pair
-    * set; its own sides cache is released before returning.
-    */
-  private[graft] def simWidePairsGrouped(banded: DataFrame, sizes: DataFrame,
-                                         maxBucket: Int, maxHamming: Int): DataFrame = {
-    val keptRows = banded.join(
-      sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-      Seq("chunk", "key"))
-    // key values are 31/32-bit non-negative, slot NULL = capped away
-    val sides = keptRows.groupBy("doc_id")
-      .agg(first("__sa").as("__sa"), first("__sb").as("__sb"),
-        map_from_entries(collect_list(struct(col("chunk"), col("key")))).as("__m"))
-      .select(col("doc_id"), col("__sa"), col("__sb"),
-        transform(sequence(lit(0), lit(3)),
-          j => try_element_at(col("__m"), j)).as("__kc"))
-      .select(col("doc_id"), col("__sa"), col("__sb"), col("__kc"),
-        posexplode(col("__kc")).as(Seq("chunk", "key")))
-      .filter(col("key").isNotNull)
-      .persist()
-    val a = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_a"),
-      col("__sa").as("__sa_a"), col("__sb").as("__sb_a"), col("__kc").as("__kc_a"))
-    val b = sides.select(col("chunk"), col("key"), col("doc_id").as("doc_id_b"),
-      col("__sa").as("__sa_b"), col("__sb").as("__sb_b"), col("__kc").as("__kc_b"))
-    try {
-      a.join(b, Seq("chunk", "key"))
-        .filter(col("doc_id_a") < col("doc_id_b"))
-        .filter(col("chunk") ===
-          graft.functions.FirstMatchBandExpr.firstMatchBand(col("__kc_a"), col("__kc_b")))
-        .withColumn("hamming",
+              struct(lit(0).as("band"), col("__sa").bitwiseAND(0x7FFFFFFFL).as("bucket")),
+              struct(lit(1).as("band"), shiftright(col("__sa"), 31).as("bucket")),
+              struct(lit(2).as("band"), col("__sb").bitwiseAND(0x7FFFFFFFL).as("bucket")),
+              struct(lit(3).as("band"), shiftright(col("__sb"), 31).as("bucket")))).as("__ck"))
+          .select(col("doc_id"), col("__sa"), col("__sb"), col("__ck.band"), col("__ck.bucket"))
+    }
+    // the self-join sides carry only the two 8-byte signatures; the
+    // first-match recomputes the 4 band keys from them
+    lshPairs(banded, 4, maxBucket, Some(capped => graft.functions.FirstUncappedWideExpr
+      .firstUncappedWide(col("__sa_a"), col("__sb_a"), col("__sa_b"), col("__sb_b"), capped))) {
+      _.withColumn("hamming",
           (bit_count(col("__sa_a").bitwiseXOR(col("__sa_b"))) +
             bit_count(col("__sb_a").bitwiseXOR(col("__sb_b")))).cast("int"))
         .filter(col("hamming") <= maxHamming)
         .select("doc_id_a", "doc_id_b", "hamming")
-        .localCheckpoint(eager = true)
-    } finally sides.unpersist()
+    }
   }
 
   // ------------------------------------------------- embedding near-dup
@@ -755,49 +550,21 @@ object Dedup {
       .getInt(0)
     val hyper: Seq[Seq[Double]] = Seq.fill(planes)(Seq.fill(dim)(rng.nextGaussian()))
 
-    def dotLit(v: Column, plane: Seq[Double]): Column =
-      graft.functions.VecOps.dotConst(v, plane)
-
     val bucketExpr =
       if (planes == 0) lit(0L)
-      else (0 until planes).map(p => when(dotLit(col("__v"), hyper(p)) >= 0, 1L << p).otherwise(0L))
+      else (0 until planes)
+        .map(p => when(graft.functions.VecOps.dotConst(col("__v"), hyper(p)) >= 0, 1L << p).otherwise(0L))
         .reduce((a, b) => a.bitwiseOR(b))
-    val keyed = df.select(col(idCol).as("vec_id"), col(vecCol).as("__v"))
-      .withColumn("__bucket", bucketExpr)
-      .persist()
-    val sizes = keyed.groupBy("__bucket").agg(count(lit(1)).as("__bsz"))
-    // capped-set cap (r14 session 2, same argument as minhashNearDuplicates):
-    // over-cap buckets number < rows/(maxBucket+1) by construction, so the
-    // cap join (a corpus-order shuffle-hash join — every keyed row's bucket
-    // exists in `sizes` by construction, making the join a pure cap filter)
-    // becomes a broadcast-set codegen filter; over-budget corpora keep the
-    // joined formulation
-    val cappedMax = df.sparkSession.conf.getOption("graft.lsh.cappedMaxKeys")
-      .map(_.toLong).getOrElse(4000000L)
-    val collectLimit = math.min(cappedMax, Int.MaxValue - 2L).toInt + 1
-    val cappedRows = sizes.filter(col("__bsz") > maxBucket)
-      .select(lit(0).as("band"), col("__bucket")).limit(collectLimit).collect()
-    val capped =
-      if (cappedMax < 0 || cappedRows.length > cappedMax)
-        keyed.join(sizes.filter(col("__bsz") <= maxBucket).hint("shuffle_hash"),
-          Seq("__bucket"))
-      else {
-        val cappedBc = df.sparkSession.sparkContext.broadcast(
-          graft.functions.CappedKeys.fromRows(cappedRows, 1))
-        keyed.filter(!graft.functions.FirstUncappedMatchExpr
-          .cappedContains(lit(0), col("__bucket"), cappedBc))
-      }
-    val a = capped.select(col("__bucket"), col("vec_id").as("vec_id_a"), col("__v").as("__va"))
-    val b = capped.select(col("__bucket"), col("vec_id").as("vec_id_b"), col("__v").as("__vb"))
-    a.join(b, Seq("__bucket"))
-      .filter(col("vec_id_a") < col("vec_id_b"))
-      // no dropDuplicates (r14): every vector lands in exactly ONE bucket
-      // (the sign pattern is a single value per row), so the self-join
-      // emits each pair at most once — the dedup was a pure exchange +
-      // aggregate over the full pair set
-      .withColumn("cosine", round(Similarity.cosine(col("__va"), col("__vb")), 6))
-      .filter(col("cosine") >= minCosine)
-      .select("vec_id_a", "vec_id_b", "cosine")
+    val banded = df.select(col(idCol).as("doc_id"), col(vecCol).as("__v"))
+      .select(col("doc_id"), col("__v"), lit(0).as("band"), bucketExpr.as("bucket"))
+    // one band, and the sign pattern is a single value per row: every
+    // vector lands in exactly ONE bucket, so the self-join emits each pair
+    // at most once with no first-match
+    lshPairs(banded, 1, maxBucket, None) {
+      _.withColumn("cosine", round(Similarity.cosine(col("__v_a"), col("__v_b")), 6))
+        .filter(col("cosine") >= minCosine)
+        .select(col("doc_id_a").as("vec_id_a"), col("doc_id_b").as("vec_id_b"), col("cosine"))
+    }
   }
 
   /** Semantic dedup (the SemDeDup recipe, arXiv:2303.09540): cluster the

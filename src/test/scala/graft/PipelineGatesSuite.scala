@@ -479,6 +479,48 @@ class PipelineGatesSuite extends SparkSpec {
     val (w1, w2) = ab(Dedup.simhashNearDuplicatesWide(fam, maxHamming = 40,
       maxBucket = 2))
     assert(w1 == w2, s"wide dispatch diverges: ${w1.length} vs ${w2.length}")
+    // embedding: planes = 2 splits the 500 sf0.01 vectors into 4 buckets of
+    // ~125, so maxBucket = 125 caps some of them; its fallback is the plain
+    // cap join (one bucket per vector, no kept-vector regroup)
+    def embPairs(maxBucket: Int) = Dedup.embeddingNearDuplicates(emb, minCosine = 0.3,
+        planes = 2, maxBucket = maxBucket)
+      .withColumnRenamed("vec_id_a", "doc_id_a").withColumnRenamed("vec_id_b", "doc_id_b")
+    val (e1, e2) = ab(embPairs(125))
+    assert(e1 == e2, s"embedding dispatch diverges: ${e1.length} vs ${e2.length}")
+    val uncapped = rows(embPairs(500))
+    assert(e1.nonEmpty && e1.length < uncapped.length,
+      s"the cap must drop some buckets and keep others: ${e1.length} of ${uncapped.length}")
+  }
+
+  test("LSH near-duplicate operators release every cache they persist") {
+    import graft.ops.Dedup
+    // each operator persists its banded frame (minhash also its shingle
+    // sets) and must release it before returning, on both dispatches: the
+    // session's cache holds no more entries after the result is collected
+    // than before the call
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // numCachedEntries is private[sql] in Scala, public on the JVM
+    def entries = cache.getClass.getMethod("numCachedEntries").invoke(cache).asInstanceOf[Int]
+    def released(name: String)(op: => org.apache.spark.sql.DataFrame): Unit = {
+      val before = entries
+      op.collect()
+      val after = entries
+      assert(after <= before, s"$name leaves ${after - before} cache entries behind")
+    }
+    for (budget <- Seq(None, Some("0"))) {
+      budget.foreach(spark.conf.set("graft.lsh.cappedMaxKeys", _))
+      val cap = if (budget.isEmpty) 1000 else 2 // budget 0 + a tight cap: the grouped fallback
+      try {
+        released(s"minhash (budget $budget)")(Dedup.minhashNearDuplicates(docs, maxBucket = cap))
+        released(s"simhash (budget $budget)")(Dedup.simhashNearDuplicates(docs,
+          maxHamming = 12, maxBucket = cap))
+        released(s"simhash wide (budget $budget)")(Dedup.simhashNearDuplicatesWide(docs,
+          maxBucket = cap))
+        released(s"embedding (budget $budget)")(Dedup.embeddingNearDuplicates(emb,
+          minCosine = 0.3, planes = 4, maxBucket = if (budget.isEmpty) 2000 else 20))
+      } finally spark.conf.unset("graft.lsh.cappedMaxKeys")
+    }
   }
 
   test("chunkDedup: carry-chunk keeper agg equals the join-back formulation") {
